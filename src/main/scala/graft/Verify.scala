@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 import graft.util.Json.quote
@@ -10,17 +9,7 @@ import graft.util.Json.quote
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: split the small local parquet files across cores.
-      .config("spark.sql.files.openCostInBytes", "16384")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // dev-only: SPARK_GRAFT_ONLY=q1,q2 restricts the dump while iterating
     // (the driver never sets it, so the official gate always runs all).
@@ -33,6 +22,9 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+        // entries that persist the same plan (c14/s28/q11 share one
+        // feature table) must not inherit each other's live caches
+        finally Session.reap(spark)
       }
     val json = SparkEntry.oracleSql
       .filter { case (name, _) => only.forall(_(name)) }

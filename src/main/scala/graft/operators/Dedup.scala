@@ -774,14 +774,14 @@ object Dedup {
    *    fixpoint test is "sum of labels unchanged", valid because labels
    *    only ever decrease.
    *
-   * Checkpoint durability is the caller's failure-domain choice:
-   * `checkpointDir = None` (default) uses localCheckpoint — executor
-   * block storage, the right call for single-node/local runs — while a
-   * set `checkpointDir` uses RELIABLE `checkpoint()` into that
-   * (cluster-visible, e.g. HDFS/S3) directory. On a 1000-executor run
-   * local checkpoints are a liability: truncated lineage lives only in
-   * executor storage, so ONE lost executor mid-loop kills the job with
-   * no recomputation path; reliable checkpoints survive executor loss.
+   * Checkpoint durability is the session's failure-domain choice
+   * ([[Rounds.checkpoint]]): unset `spark.graft.checkpointDir` uses
+   * localCheckpoint — executor block storage, the right call for
+   * single-node/local runs — while a set one uses RELIABLE `checkpoint()`
+   * into that directory. On a 1000-executor run local checkpoints are a
+   * liability: truncated lineage lives only in executor storage, so ONE
+   * lost executor mid-loop kills the job with no recomputation path;
+   * reliable checkpoints survive executor loss.
    *
    * If the loop exhausts `maxRounds` without reaching the fixpoint the
    * labels are PARTIAL (some nodes still carry a non-minimal component
@@ -794,38 +794,9 @@ object Dedup {
    * distributed CC (large-star/small-star family), linear per round.
    */
   def connectedComponents(nodes: DataFrame, idCol: String, pairs: DataFrame,
-      id1: String = "id1", id2: String = "id2", maxRounds: Int = 16,
-      checkpointDir: Option[String] = None): DataFrame = {
+      id1: String = "id1", id2: String = "id2", maxRounds: Int = 16): DataFrame = {
     require(maxRounds >= 1, "at least one propagation round")
-    val sc = nodes.sparkSession.sparkContext
-    // r17 (verdict item 3): `spark.graft.checkpointDir` on the session
-    // opts every round save into RELIABLE checkpointing — executor-loss-
-    // safe round state at scale; unset keeps localCheckpoint (the local
-    // bench default). The explicit parameter still wins when passed.
-    val effDir = checkpointDir.orElse(
-      nodes.sparkSession.conf.getOption("spark.graft.checkpointDir"))
-    effDir.foreach(sc.setCheckpointDir)
-    // Each eager localCheckpoint PERSISTS its blocks for the life of the
-    // session; without explicit cleanup every round of every call pins
-    // another label table in the block manager (and its delayed GC-driven
-    // cleanup lands inside whatever runs next — measured as multi-second
-    // noise on later queries in a bench pass). Track the RDD ids each
-    // save() persists (id-set diff; this operator is single-threaded) and
-    // drop a round's blocks as soon as the NEXT eager checkpoint exists.
-    def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def drop(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    def save(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = persistedIds
-      try {
-        val out = if (effDir.isDefined) df.checkpoint() else df.localCheckpoint()
-        (out, persistedIds -- before)
-      } catch {
-        // an eager checkpoint PERSISTS before its job runs — a failing
-        // save can leave blocks behind with no caller to track them
-        case e: Throwable => drop(persistedIds -- before); throw e
-      }
-    }
+    val st = new Rounds.State(nodes.sparkSession.sparkContext)
     var edgeIds = Set.empty[Int]
     var labelIds = Set.empty[Int]
     // any failure path (a save, a round's job dying, the non-convergence
@@ -833,10 +804,10 @@ object Dedup {
     // drop them on the way out or they pin block-manager memory for the
     // life of the session
     try {
-      val edges = { val s = save(pairs.select(col(id1).as("src"), col(id2).as("dst"))
+      val edges = { val s = st.save(pairs.select(col(id1).as("src"), col(id2).as("dst"))
           .unionAll(pairs.select(col(id2).as("src"), col(id1).as("dst"))))
         edgeIds = s._2; s._1 }
-      var labels = { val s = save(nodes.select(col(idCol).as("id"), col(idCol).as("comp")))
+      var labels = { val s = st.save(nodes.select(col(idCol).as("id"), col(idCol).as("comp")))
         labelIds = s._2; s._1 }
       def labelSum(df: DataFrame): java.math.BigDecimal =
         df.agg(sum(col("comp").cast("decimal(38,0)"))).collect().head.getDecimal(0)
@@ -851,10 +822,10 @@ object Dedup {
           .join(nbrMin, Seq("id"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        val (nextLabels, nextIds) = save(jumped
+        val (nextLabels, nextIds) = st.save(jumped
           .join(jumped.select(col("id").as("comp"), col("comp").as("comp2")), Seq("comp"), "left")
           .select(col("id"), least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp")))
-        drop(labelIds) // superseded round — next checkpoint is already eager/materialized
+        st.drop(labelIds) // superseded round — next checkpoint is already eager/materialized
         labels = nextLabels
         labelIds = nextIds
         val s = labelSum(labels)
@@ -867,14 +838,14 @@ object Dedup {
           s"connectedComponents did not converge within maxRounds=$maxRounds " +
             "(labels would be silently partial); raise maxRounds — rounds needed " +
             "grows with log2(component diameter)")
-      drop(edgeIds) // final labels are materialized; the edge list is dead
+      st.drop(edgeIds) // final labels are materialized; the edge list is dead
       // the FINAL label checkpoint stays persisted — the returned DataFrame
       // reads from it (truncated lineage has no recompute path)
       labels.select(col("id"), col("comp").as("component_id"))
     } catch {
       case e: Throwable =>
-        drop(edgeIds)
-        drop(labelIds)
+        st.drop(edgeIds)
+        st.drop(labelIds)
         throw e
     }
   }

@@ -50,46 +50,6 @@ object Graph {
     math.max(1, math.min(conf, math.ceil(nRows / 524288.0).toInt))
   }
 
-  /** Checkpoint MEDIUM for the iterative loops (r17, verdict item 3):
-    * `localCheckpoint` stores executor-local blocks with TRUNCATED
-    * lineage — cheap, but on a real cluster an executor loss (or
-    * memory-pressure eviction) makes round state unrecoverable
-    * mid-query. With `spark.graft.checkpointDir` set on the session,
-    * every round save becomes a RELIABLE `checkpoint()` into that
-    * directory instead — the standard iterative-graph discipline at
-    * scale (survives executor loss; pair it with
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so
-    * superseded rounds' files are reclaimed). Local default: unset →
-    * localCheckpoint, keeping the bench protocol byte-identical. */
-  private def roundCheckpoint(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf.getOption("spark.graft.checkpointDir")
-    conf match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-  }
-
-  /** block-manager hygiene for iterative loops — the connectedComponents
-    * pattern: track which RDD ids each eager checkpoint persists, drop a
-    * round's blocks as soon as the next round's checkpoint is live. */
-  private final class RoundState(sc: org.apache.spark.SparkContext) {
-    private def persistedIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    def drop(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    def save(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = persistedIds
-      try {
-        val out = roundCheckpoint(df)
-        (out, persistedIds -- before)
-      } catch {
-        case e: Throwable => drop(persistedIds -- before); throw e
-      }
-    }
-  }
-
   /**
    * PageRank with damping 0.85 over a directed edge list (`src`, `dst`;
    * an undirected graph is passed as both directions), `iterations`
@@ -136,7 +96,7 @@ object Graph {
     require(iterations >= 1, "at least one power-iteration round")
     val spark = edges.sparkSession
     val sc = spark.sparkContext
-    val st = new RoundState(sc)
+    val st = new Rounds.State(sc)
     // the caller's edge construction can be expensive (a join + distinct
     // at the catalog fixtures) and is consumed FOUR times below (both
     // sides of the degree join, both legs of the node union) — cache it
@@ -258,7 +218,7 @@ object Graph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
     val spark = edges.sparkSession
-    val st = new RoundState(spark.sparkContext)
+    val st = new Rounds.State(spark.sparkContext)
     // cache the raw construction once, size the round width to the data
     // (dataWidth — the r17 scaling fix), then re-cache partitioned on
     // src; the second pass reads the first cache, and the raw copy is
@@ -336,7 +296,7 @@ object Graph {
   def commonNeighborCandidates(canonicalEdges: DataFrame,
       apexCap: Int): DataFrame = {
     require(apexCap >= 1, "apexCap must be positive")
-    val e = roundCheckpoint(canonicalEdges.select(
+    val e = Rounds.checkpoint(canonicalEdges.select(
       col("a").cast("long").as("a"), col("b").cast("long").as("b")))
     val adj = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
@@ -381,7 +341,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "at least one propagation round")
     val spark = edges.sparkSession
-    val st = new RoundState(spark.sparkContext)
+    val st = new Rounds.State(spark.sparkContext)
     // data-sized round width (see dataWidth) via a cache-count-recache
     // of the caller's construction — one construction pass total
     val e0 = edges.select(col("src").cast("long").as("src"),
@@ -460,7 +420,7 @@ object Graph {
   def kCore(canonicalEdges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "need k >= 1 and at least one round")
     val spark = canonicalEdges.sparkSession
-    val st = new RoundState(spark.sparkContext)
+    val st = new Rounds.State(spark.sparkContext)
     var eIds = Set.empty[Int]
     var e = {
       val s0 = st.save(canonicalEdges.select(
@@ -544,7 +504,7 @@ object Graph {
     val e = e0.repartition(width, col("src")).persist()
     e.count()
     e0.unpersist(blocking = false)
-    val st = new RoundState(spark.sparkContext)
+    val st = new Rounds.State(spark.sparkContext)
     var hIds = Set.empty[Int]
     try {
       // node set + per-layer state are checkpointed (the pageRank
@@ -598,7 +558,7 @@ object Graph {
     // construction into the plan (measured: 67 initial-plan exchanges on
     // the co-occurrence entry vs 8 after — the l7 final-label precedent;
     // the bench's between-query reaper reclaims the blocks)
-    val e = roundCheckpoint(canonicalEdges.select(
+    val e = Rounds.checkpoint(canonicalEdges.select(
       col("a").cast("long").as("a"), col("b").cast("long").as("b")))
     val deg = e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -662,15 +622,6 @@ object Graph {
     require(length >= 1, "need at least one step")
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
-    // dev-only step profiler (SPARK_GRAFT_WALKLOG=1): stderr wall-clock
-    // per phase, for attributing the in-suite g10 elevation
-    val wlog = sys.env.get("SPARK_GRAFT_WALKLOG").contains("1")
-    var tPrev = System.nanoTime()
-    def mark(phase: String): Unit = if (wlog) {
-      val t = System.nanoTime()
-      System.err.println(f"[walklog] $phase%-18s ${(t - tPrev) / 1e9}%7.2f s")
-      tPrev = t
-    }
     // the caller's edge construction is consumed twice below (the ranked
     // window and the degree aggregate) — cache it once, and size the
     // step width to the data (dataWidth — the r17 scaling fix)
@@ -724,8 +675,7 @@ object Graph {
         .distinct()
         .select(col("walk_id"), col("walk_id").as("cur"),
           col("outdeg").as("cur_outdeg"))
-        .transform(roundCheckpoint)
-      mark("seed")
+        .transform(Rounds.checkpoint)
       val out = Seq.newBuilder[DataFrame]
       out += frontier.select(col("walk_id"), lit(0L).as("step"),
         col("cur").as("node_id"))
@@ -740,16 +690,7 @@ object Graph {
             picked("rn_pick") === adj("rn").cast("long"))
           .select(col("walk_id"), col("dst").as("cur"),
             col("dst_outdeg").as("cur_outdeg"))
-        frontier = roundCheckpoint(joined)
-        mark(s"step $k")
-        if (wlog) {
-          val plan = joined.queryExecution.executedPlan.toString
-          val joinNodes = plan.linesIterator
-            .filter(l => l.contains("Join") || l.contains("Exchange"))
-            .map(_.trim.take(160)).mkString(" || ")
-          System.err.println(s"[walklog]   rows=${frontier.count()} join: $joinNodes")
-          tPrev = System.nanoTime()
-        }
+        frontier = Rounds.checkpoint(joined)
         out += frontier.select(col("walk_id"), lit(k.toLong).as("step"),
           col("cur").as("node_id"))
       }
@@ -826,7 +767,7 @@ object Graph {
     require(iterations >= 1 && scale >= 1, "need iterations and a positive scale")
     val spark = edges.sparkSession
     val sc = spark.sparkContext
-    val st = new RoundState(sc)
+    val st = new Rounds.State(sc)
     // cache the raw construction once and size the round width to the
     // data (dataWidth — the r17 scaling fix); the count doubles as the
     // empty-graph gate AND the deliberate full cache fill the r16 advice

@@ -10178,9 +10178,9 @@ object Catalog {
       // stage the frame stream ONCE: the two require-gates and the
       // returned frame all read it (un-persisted, each was a separate
       // evaluation of the explode chain — the p8 staging discipline).
-      // Left persisted for the caller's evaluation; the bench reaper
+      // Left persisted for the caller's evaluation; Session.reap
       // unpersists leftovers between queries (the eager-checkpoint
-      // contract in Bench.runOnce).
+      // contract).
       val frames = graft.operators.Multimodal
         .sampleFrames(vids, frameChars = 64, everyK = 1).persist()
       val kept = frames

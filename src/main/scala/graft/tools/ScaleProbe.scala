@@ -285,7 +285,7 @@ object ScaleProbe {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val probes = ProbeHarness.probesFrom("SPARK_GRAFT_PROBES", DefaultProbes)
-    val spark = ProbeHarness.buildSession(cpus)
+    val spark = graft.Session.local(cpus.toInt)
 
     // ×mult corpus: ids re-salted into disjoint ranges, text/names as-is
     val out = graft.util.Scratch.deleteOnExit(

@@ -95,7 +95,7 @@ object SkewProbe {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val probes = ProbeHarness.probesFrom("SPARK_GRAFT_SKEW_PROBES", DefaultProbes)
-    val spark = ProbeHarness.buildSession(cpus)
+    val spark = graft.Session.local(cpus.toInt)
 
     val out = graft.util.Scratch.deleteOnExit(
       s"/tmp/graft_skew_probe/${java.util.UUID.randomUUID.toString.take(8)}")

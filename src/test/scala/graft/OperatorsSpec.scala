@@ -591,13 +591,16 @@ class OperatorsSpec extends AnyFunSuite {
     val nodes = (0L until 12L).map(Tuple1(_)).toDF("id")
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("id1", "id2")
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val got = Dedup.connectedComponents(nodes, "id", chain,
-      checkpointDir = Some(dir))
+    spark.conf.set("spark.graft.checkpointDir", dir)
+    val got = try Dedup.connectedComponents(nodes, "id", chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset("spark.graft.checkpointDir")
     assert(got == (0L until 12L).map(_ -> 0L).toMap)
-    // reliable checkpoints actually landed in the requested dir
-    assert(new java.io.File(dir).listFiles() != null &&
-      new java.io.File(dir).listFiles().nonEmpty, "checkpoint dir must be used")
+    // reliable checkpoints actually landed in the requested dir, all in
+    // the one subdirectory the context was pointed at (not one per round)
+    val subdirs = new java.io.File(dir).listFiles()
+    assert(subdirs != null && subdirs.length == 1 &&
+      subdirs.head.listFiles().nonEmpty, "checkpoint dir must be used")
     // a diameter-11 chain cannot converge in one round: partial labels
     // must fail loudly, never return silently wrong component ids
     val before = spark.sparkContext.getPersistentRDDs.keySet

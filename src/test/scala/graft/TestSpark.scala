@@ -8,14 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session + reference (re-)implementations used to check the
   * engine's Column expressions against plain Scala. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4,
+    Some(Files.createTempDirectory("graft-warehouse").toString))
 
   def md5hex(s: String): String =
     MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
